@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
+
+import graft.functions.Observability.JobCounter
 
 /** Benchmark harness: times every SparkEntry query on the sf dir named
   * by SPARK_GRAFT_SF_DIR and emits ONE JSON line.
@@ -335,48 +336,29 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "BENCH_REF.json")
     val reference = loadReference(refPath)
     // first calibration sample before the Spark session exists; a
     // second runs after the queries (see below) — early samples read
     // up to ~20% slow while the JIT compiler storm shares cores
-    val (cpu1tStart, cpuMt) = cpuCalibration(cpus.toInt)
+    val (cpu1tStart, cpuMt) = cpuCalibration(cpus)
     val cpuAllocStart = allocCalibration()
     val refCpu1t = loadRefCpu1t(refPath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // == Scaling legibility (r16 verdict item 2) ==
+    val spark = Sessions.local(cpus)
+    // == Scaling legibility ==
     // At sf0.1 the suite is driver-job-latency-bound: 198 queries in
     // ~130 s is ~0.66 s/query, most of it scheduling floor, so the
     // wall-clock 8c/32c ratio reads ≈1 even though the session honors
     // $SPARK_GRAFT_CPUS. The artifact must let a reader attribute that
-    // flatness to its real cause, so a passive listener counts driver
-    // jobs and tasks per query (from the min-time run) and the session
-    // records its parallelism. onJobStart/onStageSubmitted both fire
-    // BEFORE the work they announce, so by the time the synchronous
-    // force() returns the counts are complete — no sleep, no wall cost.
-    val jobsCtr = new java.util.concurrent.atomic.AtomicInteger(0)
-    val tasksCtr = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobsCtr.incrementAndGet()
-        override def onStageSubmitted(
-            ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-          tasksCtr.addAndGet(ss.stageInfo.numTasks)
-      })
-    val qJobs = scala.collection.mutable.LinkedHashMap[String, Int]()
-    val qTasks = scala.collection.mutable.LinkedHashMap[String, Int]()
+    // flatness to its real cause, so it records per-query Spark jobs
+    // and tasks (from the min-time run) and the session's parallelism.
+    // The listener bus is asynchronous: the counts are read after
+    // draining it, outside the timed region.
+    val counter = new JobCounter(spark)
+    val qJobs = scala.collection.mutable.LinkedHashMap[String, Long]()
+    val qTasks = scala.collection.mutable.LinkedHashMap[String, Long]()
     // == Start-of-run load defense (round-12 verdict item 3) ==
     // Two consecutive driver rounds produced official artifacts from a
     // box at loadavg 5.8–7.6 (co-tenant load): per-query retries can
@@ -421,13 +403,14 @@ object Bench {
         // (seconds, driver jobs, tasks) per run; the artifact keeps
         // the counts of the MIN-time run (steady state — run 1's extra
         // cache-fill jobs are the warm-up the min already excludes)
-        def once(): Either[String, (Double, Int, Int)] = {
-          val j0 = jobsCtr.get(); val k0 = tasksCtr.get()
+        def once(): Either[String, (Double, Long, Long)] = {
+          val c0 = counter.drain()
           val t0 = System.nanoTime()
           try {
             force(fn(spark, sfDir))
-            Right(((System.nanoTime() - t0) / 1e9,
-              jobsCtr.get() - j0, tasksCtr.get() - k0))
+            val t = (System.nanoTime() - t0) / 1e9
+            val c = counter.drain() - c0
+            Right((t, c.jobs, c.tasks))
           } catch {
             case e: Throwable =>
               Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
@@ -435,7 +418,7 @@ object Bench {
         }
         val lBefore = load1()
         val ok = ArrayBuffer[Double]()
-        val okMeta = ArrayBuffer[(Int, Int)]()
+        val okMeta = ArrayBuffer[(Long, Long)]()
         val bad = ArrayBuffer[String]()
         def attempt(): Unit = once() match {
           case Right((t, j, k)) => ok += t; okMeta += ((j, k))
@@ -495,16 +478,17 @@ object Bench {
     def remeasure(name: String,
                   fn: (org.apache.spark.sql.SparkSession,
                        String) => org.apache.spark.sql.DataFrame): Unit = {
-      val j0 = jobsCtr.get(); val k0 = tasksCtr.get()
+      val c0 = counter.drain()
       val t0 = System.nanoTime()
       try {
         force(fn(spark, sfDir))
         val t = (System.nanoTime() - t0) / 1e9
+        val c = counter.drain() - c0
         allRuns(name) += t
         if (t < timings(name)) {
           timings(name) = t
-          qJobs(name) = jobsCtr.get() - j0
-          qTasks(name) = tasksCtr.get() - k0
+          qJobs(name) = c.jobs
+          qTasks(name) = c.tasks
         }
       } catch {
         case scala.util.control.NonFatal(e) =>
@@ -540,7 +524,7 @@ object Bench {
     // the loadavg evidence is already in "load"/"load_start".
     // end-of-run calibration sample: the JVM is fully warm and idle
     // between queries, so min(start, end) is the host's real speed
-    val cpu1t = math.min(cpu1tStart, cpuCalibration(cpus.toInt)._1)
+    val cpu1t = math.min(cpu1tStart, cpuCalibration(cpus)._1)
     val cpuAlloc = math.min(cpuAllocStart, allocCalibration())
     // a slower host inflates every query by ~the calibration ratio;
     // never scale BELOW 1 (a faster host must not excuse a regression)
@@ -610,7 +594,7 @@ object Bench {
     val suspectNames = suspectList.map(_._1).toSet
     val cleanTotal = results.map { case (k, v) =>
       if (suspectNames(k)) reference(k) else v }.sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpus":$cpus,"default_parallelism":$defaultPar,"jobs":$jobsJson,"tasks":$tasksJson,"runs":$runsJson,"load":$loadJson,"load_start":$loadStart,"load_end":$loadEnd,"suspect":$suspectJson,"clean_total":${r3(cleanTotal)},"cpu_1t":${r3(cpu1t)},"cpu_mt":${r3(cpuMt)},"cpu_alloc":${r3(cpuAlloc)},"host_factor":${r3(hostFactor)},"run_drift":${r3(runDrift)},"run_drift_norm":${r3(runDriftNorm)},"run_retried":$runRetried,"run_suspect":$runSuspect,"invalid_load":$invalidLoad,"foreign_mean":${r3(foreignMean)},"foreign_peak":${r3(foreignPeak)},"foreign_n":${foreignSamples.size},"midrun_load_breach":$midrunBreach,"errors":$errJson,"failed":${failed.size},"sf":"$sfDir","methodology":"forcing = full materialization of the query plan via toRdd (r15; .count() let Catalyst prune projections and eliminate unique-key joins, under-measuring projection-heavy queries); min of 2 runs per query (run 1 pays one-time codegen/broadcast builds); >3x run disagreement -> third evidence run, value = min of all runs (r15: the median of [fast, comparable, codegen-heavy] returned the slower comparable run and stamped warm-fast queries 2-3x over anchor at true idle; wall noise is one-sided so min is sound); readings >5x the committed BENCH_REF.json value retried up to 2x spaced 500ms then flagged suspect (ambient-load audit: per-run times in runs, 1-min loadavg before/after each query in load); clean_total substitutes reference values for suspect readings; run-level gate: if suspect-substituted total exceeds 1.25x the reference total over jointly-known queries (normalized by host_factor = mean of this host's calibration ratios over the reference's - single-thread md5 cpu_1t and small-string alloc/hash-group cpu_alloc, the explode-family regime md5 cannot see - floored at 1; rounds land on different-speed hosts), one full extra pass re-measures every query (min taken), and a run still above the gate is stamped run_suspect; load defense: the run waits up to SPARK_GRAFT_LOAD_WAIT_SECS (default 600s) for 1-min loadavg <= SPARK_GRAFT_LOAD_MAX (default 2.0) before measuring and is stamped invalid_load if it must start loaded, a daemon thread additionally samples FOREIGN cpu (system busy jiffies minus this process, /proc/stat vs /proc/self/stat, every 5s) for the whole suite and a mean above SPARK_GRAFT_FOREIGN_MAX (default 2.0 cores) stamps midrun_load_breach and run_suspect - the start-only loadavg gate is blind to co-tenants arriving mid-run and raw loadavg cannot police the middle of a run that itself runs local[32], and any query still >=2x its reference after in-flight retries gets one end-of-suite requeue (min taken); BENCH_REF refresh rule: a new reference requires two back-to-back verified-idle runs agreeing within ~1%, a committed tools/bench_trend.py comparison vs the outgoing anchor, and a stated cause in the commit - serial refreshes without that evidence could hide a slow creep; scaling evidence (r16 verdict #2): cpus/default_parallelism record the session parallelism ($$SPARK_GRAFT_CPUS is honored - master local[cpus], shuffle.partitions=cpus) and jobs/tasks carry per-query driver-job and task counts from the min-time run (passive SparkListener; onJobStart/onStageSubmitted fire before the work they announce, so counts are complete when the synchronous force() returns) - at bench SF most queries are near the per-job scheduling floor, so a flat wall ratio between cpu counts is attributable to driver-job latency, not to ignored cores"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpus":$cpus,"default_parallelism":$defaultPar,"jobs":$jobsJson,"tasks":$tasksJson,"runs":$runsJson,"load":$loadJson,"load_start":$loadStart,"load_end":$loadEnd,"suspect":$suspectJson,"clean_total":${r3(cleanTotal)},"cpu_1t":${r3(cpu1t)},"cpu_mt":${r3(cpuMt)},"cpu_alloc":${r3(cpuAlloc)},"host_factor":${r3(hostFactor)},"run_drift":${r3(runDrift)},"run_drift_norm":${r3(runDriftNorm)},"run_retried":$runRetried,"run_suspect":$runSuspect,"invalid_load":$invalidLoad,"foreign_mean":${r3(foreignMean)},"foreign_peak":${r3(foreignPeak)},"foreign_n":${foreignSamples.size},"midrun_load_breach":$midrunBreach,"errors":$errJson,"failed":${failed.size},"sf":"$sfDir","methodology":"forcing = full materialization of the query plan via toRdd (.count() let Catalyst prune projections and eliminate unique-key joins, under-measuring projection-heavy queries); min of 2 runs per query (run 1 pays one-time codegen/broadcast builds); >3x run disagreement -> third evidence run, value = min of all runs (the median of [fast, comparable, codegen-heavy] returned the slower comparable run and stamped warm-fast queries 2-3x over anchor at true idle; wall noise is one-sided so min is sound); readings >5x the committed BENCH_REF.json value retried up to 2x spaced 500ms then flagged suspect (ambient-load audit: per-run times in runs, 1-min loadavg before/after each query in load); clean_total substitutes reference values for suspect readings; run-level gate: if suspect-substituted total exceeds 1.25x the reference total over jointly-known queries (normalized by host_factor = mean of this host's calibration ratios over the reference's - single-thread md5 cpu_1t and small-string alloc/hash-group cpu_alloc, the explode-family regime md5 cannot see - floored at 1; rounds land on different-speed hosts), one full extra pass re-measures every query (min taken), and a run still above the gate is stamped run_suspect; load defense: the run waits up to SPARK_GRAFT_LOAD_WAIT_SECS (default 600s) for 1-min loadavg <= SPARK_GRAFT_LOAD_MAX (default 2.0) before measuring and is stamped invalid_load if it must start loaded, a daemon thread additionally samples FOREIGN cpu (system busy jiffies minus this process, /proc/stat vs /proc/self/stat, every 5s) for the whole suite and a mean above SPARK_GRAFT_FOREIGN_MAX (default 2.0 cores) stamps midrun_load_breach and run_suspect - the start-only loadavg gate is blind to co-tenants arriving mid-run and raw loadavg cannot police the middle of a run that itself runs local[32], and any query still >=2x its reference after in-flight retries gets one end-of-suite requeue (min taken); BENCH_REF refresh rule: a new reference requires two back-to-back verified-idle runs agreeing within ~1%, a committed tools/bench_trend.py comparison vs the outgoing anchor, and a stated cause in the commit - serial refreshes without that evidence could hide a slow creep; scaling evidence: cpus/default_parallelism record the session parallelism ($$SPARK_GRAFT_CPUS is honored - master local[cpus], shuffle.partitions=cpus) and jobs/tasks carry per-query Spark job and submitted-stage task counts from the min-time run (SparkListener counts read after draining the listener bus via LiveListenerBus.waitUntilEmpty, outside the timed region, so they are exact) - at bench SF most queries are near the per-job scheduling floor, so a flat wall ratio between cpu counts is attributable to per-job scheduling latency, not to ignored cores"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes("UTF-8"))
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{OperatorCaches, Similarity}
@@ -9,7 +9,11 @@ import graft.operators.{OperatorCaches, Similarity}
   * every variant in the ladder — untrained (first-`nlist` pivots) vs
   * TRAINED (one deterministic Lloyd round, Similarity.kmeansPivotArr)
   * coarse quantizers, at several nprobe settings — producing the
-  * recall table COVERAGE.md records. Run:
+  * recall table COVERAGE.md records. The `s3_*` rows separate the
+  * coarse-quantizer role of a sample-trained book from its PQ role
+  * (3 Lloyd rounds on the 25% sample), and `f1_both` trains one round
+  * on the full corpus: the decomposition behind q_ann_trained_rerank's
+  * one-round, 25%-sample choice. Run:
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.RecallAudit"
   *
@@ -31,13 +35,7 @@ object RecallAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val qPred = col("vec_id") < 64
@@ -56,6 +54,11 @@ object RecallAudit {
         emb.filter(pmod(col("vec_id"), lit(4L)) === 0), k = 16, iters = 1)
       .localCheckpoint(true)
     val samplePivots = Similarity.carrToPivotArr(sampleBook)
+      .localCheckpoint(true)
+    val sample3Book = Similarity.kmeansCarr(
+        emb.filter(pmod(col("vec_id"), lit(4L)) === 0), k = 16, iters = 3)
+      .localCheckpoint(true)
+    val sample3Pivots = Similarity.carrToPivotArr(sample3Book)
       .localCheckpoint(true)
     OperatorCaches.releaseAll()
 
@@ -113,6 +116,19 @@ object RecallAudit {
           nprobe = nprobe, pivotsOpt = Some(samplePivots),
           bookOpt = Some(sampleBook)), truth, k)))
       OperatorCaches.releaseAll()
+      // rerank@40 under other (coarse pivots, PQ book) pairings;
+      // None keeps the operator's default for that role
+      Seq(("s3_both", Some(sample3Pivots), Some(sample3Book)),
+          ("s3_coarse_only", Some(sample3Pivots), None),
+          ("s3_pq_only", None, Some(sample3Book)),
+          ("f1_both", Some(trained), Some(trainedBook))).foreach {
+        case (variant, pivots, book) =>
+          rows += ((variant, nprobe,
+            recallOf(Similarity.ivfPqRerankTopK(emb, qPred, k, rerank = 40,
+              nprobe = nprobe, pivotsOpt = pivots, bookOpt = book),
+              truth, k)))
+          OperatorCaches.releaseAll()
+      }
       // RP rung has no nprobe; its dial is the shortlist pool —
       // reuse the loop variable as pool = 10·nprobe for the sweep
       rows += (("rp16_rerank_pool10x", nprobe,

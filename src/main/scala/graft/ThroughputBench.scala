@@ -11,14 +11,12 @@ import graft.streaming.TransactionPipeline
   * <100 ms latency, on a 3-TaskManager Flink cluster + Redis + a
   * Python ML service).
   *
-  * Two modes:
-  *  - batch: N generated transactions through the full scoring plan,
-  *    forced end-to-end by an aggregate over the outputs;
-  *  - stream: rate source → the same plan → noop sink, sustained
-  *    micro-batch processing rate from StreamingQueryProgress.
-  *
-  * Prints one JSON line:
-  * {"batch_rows_per_sec":…,"stream_rows_per_sec":…,"rows":N}
+  * The default mode pushes N generated transactions through the full
+  * scoring plan, forced end-to-end by an aggregate over the outputs,
+  * and prints one JSON line: {"batch_rows_per_sec":…,"rows":N,"check":…}.
+  * `docs`, `log` and `log-avro` measure the curation gauntlet and the
+  * graftlog wire. The streaming loop's throughput and latency are
+  * measured by `perfbench/run.py`.
   */
 object ThroughputBench {
 
@@ -217,60 +215,8 @@ object ThroughputBench {
     println(f"""{"log_avro_produce_rows_per_sec":${avroProduce}%.0f,"log_avro_consume_rows_per_sec":${avroConsume}%.0f,"log_avro_consume_warm_rows_per_sec":${avroWarm}%.0f,"log_json_produce_rows_per_sec":${jsonProduce}%.0f,"log_json_consume_rows_per_sec":${jsonConsume}%.0f,"log_json_consume_warm_rows_per_sec":${jsonWarm}%.0f,"rows":$n,"parity":$parity}""")
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("log-avro")) {
-      val n = args.lift(1).map(_.toLong).getOrElse(5000000L)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      runLogAvro(spark, n, cpus.toInt)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("log")) {
-      val n = args.lift(1).map(_.toLong).getOrElse(5000000L)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      runLog(spark, n, cpus.toInt)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("docs")) {
-      val n = args.lift(1).map(_.toLong).getOrElse(2000000L)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      runDocs(spark, n, cpus.toInt)
-      spark.stop()
-      return
-    }
-    val n = args.headOption.map(_.toLong).getOrElse(5000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
+  /** Transactions/sec through enrich → features → score → decide. */
+  private def runBatch(spark: SparkSession, n: Long, cpus: Int): Unit = {
     val users = graft.gen.DataGen.userProfiles(spark, 10000)
       .select("user_id", "risk_score", "avg_transaction_amount", "kyc_status")
     val merch = merchants(spark, 5000)
@@ -284,9 +230,8 @@ object ThroughputBench {
           TransactionPipeline.enrich(asPipelineInput(txns), users, merch),
           col("amount"), col("timestamp")))
 
-    // ---- batch ----
     val txns = graft.gen.DataGen.transactions(spark, n, nUsers = 10000)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
     // warm (codegen + broadcast build)
     scored(txns.limit(10000)).agg(sum(col("fraud_score"))).collect()
     val t0 = System.nanoTime()
@@ -296,32 +241,20 @@ object ThroughputBench {
       .collect()
     val batchRate = n / ((System.nanoTime() - t0) / 1e9)
 
-    // ---- streaming (rate source → same plan → noop sink) ----
-    val rate = spark.readStream.format("rate")
-      .option("rowsPerSecond", "2000000").option("numPartitions", cpus)
-      .load()
-      .select(
-        concat(lit("t"), col("value")).as("transaction_id"),
-        concat(lit("u"), pmod(col("value"), lit(10000L))).as("user_id"),
-        concat(lit("m"), pmod(col("value"), lit(5000L))).as("merchant_id"),
-        (pmod(xxhash64(col("value")), lit(100000L)).cast("double") / 100.0)
-          .as("amount"),
-        col("timestamp"),
-        struct((lit(40.0) + pmod(col("value"), lit(100L)) / 100.0).as("lat"),
-               lit(-74.0).as("lon")).as("geolocation"),
-        lit(null).cast("string").as("fraud_type"))
-    val listener = new graft.functions.Observability.RateListener()
-    spark.streams.addListener(listener)
-    val q = scored(rate).writeStream.format("noop").outputMode("append").start()
-    Thread.sleep(20000)
-    q.stop()
-    spark.streams.removeListener(listener)
-    val streamRate = {
-      val s = listener.stats.drop(2) // skip ramp-up batches
-      if (s.isEmpty) 0.0 else s.map(_.processedRowsPerSecond).max
-    }
+    println(f"""{"batch_rows_per_sec":${batchRate}%.0f,"rows":$n,"check":${agg.head.getLong(1)}}""")
+  }
 
-    println(f"""{"batch_rows_per_sec":${batchRate}%.0f,"stream_rows_per_sec":${streamRate}%.0f,"rows":$n,"check":${agg.head.getLong(1)}}""")
+  def main(args: Array[String]): Unit = {
+    val mode = args.headOption.filter(Set("docs", "log", "log-avro"))
+    val n = args.lift(if (mode.isDefined) 1 else 0).map(_.toLong)
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
+    mode match {
+      case Some("docs")     => runDocs(spark, n.getOrElse(2000000L), cpus)
+      case Some("log")      => runLog(spark, n.getOrElse(5000000L), cpus)
+      case Some("log-avro") => runLogAvro(spark, n.getOrElse(5000000L), cpus)
+      case _                => runBatch(spark, n.getOrElse(5000000L), cpus)
+    }
     spark.stop()
   }
 }

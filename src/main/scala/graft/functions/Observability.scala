@@ -1,8 +1,11 @@
 package graft.functions
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.graftshim.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -18,6 +21,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * - `RateListener`: a StreamingQueryListener capturing per-batch
   *   input rate / processing rate / watermark, the numbers the
   *   reference scraped from Flink's reporter.
+  * - `JobCounter`: Spark jobs, stages and tasks, exact once drained.
   */
 object Observability {
 
@@ -50,5 +54,40 @@ object Observability {
         p.inputRowsPerSecond, p.processedRowsPerSecond))
       while (q.size() > keep) q.poll()
     }
+  }
+
+  final case class JobCounts(jobs: Long, stages: Long, tasks: Long) {
+    def -(o: JobCounts): JobCounts =
+      JobCounts(jobs - o.jobs, stages - o.stages, tasks - o.tasks)
+  }
+
+  /** Counts jobs, submitted stages and their tasks on `spark`'s
+    * listener bus. The bus delivers events asynchronously, so a count
+    * read right after an action can miss its last events; [[drain]]
+    * first waits until the bus has delivered everything posted so far.
+    * Skipped stages are never submitted and count nothing.
+    */
+  final class JobCounter(spark: SparkSession) extends SparkListener {
+    private val jobs = new AtomicLong
+    private val stages = new AtomicLong
+    private val tasks = new AtomicLong
+    spark.sparkContext.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(e.stageInfo.numTasks)
+    }
+
+    /** Totals since construction, after every event posted before this
+      * call has been delivered; throws `TimeoutException` after 60 s.
+      */
+    def drain(): JobCounts = {
+      ListenerBusBridge.waitUntilEmpty(spark.sparkContext, 60000L)
+      JobCounts(jobs.get, stages.get, tasks.get)
+    }
+
+    def stop(): Unit = spark.sparkContext.removeSparkListener(this)
   }
 }

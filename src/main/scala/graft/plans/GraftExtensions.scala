@@ -34,8 +34,8 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 }
 
 /** Session extensions: `haversine_km` and `dot_d` as SQL-registered native
-  * expression plus the approx-distinct rewrite. Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * expression plus the approx-distinct rewrite. Install with a session
+  * builder's `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object GraftExtensions {

@@ -46,4 +46,13 @@ class ObservabilitySpec extends AnyFunSuite {
       assert(listener.stats.exists(_.numInputRows == 2))
     } finally spark.streams.removeListener(listener)
   }
+
+  test("JobCounter drain: 4-partition range is exactly 1 job, 1 stage, 4 tasks") {
+    val counter = new Observability.JobCounter(spark)
+    try {
+      val before = counter.drain()
+      spark.range(0, 1000, 1, 4).queryExecution.toRdd.count()
+      assert(counter.drain() - before == Observability.JobCounts(1, 1, 4))
+    } finally counter.stop()
+  }
 }

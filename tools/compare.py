@@ -493,14 +493,15 @@ def main():
         json_path.write_text("{}")
 
     if "--skip-run" not in sys.argv:
-        # Bounded + survivable Verify leg (r16 verdict #1): the old
-        # path exited the whole sweep on a non-zero sbt rc, so one
-        # Spark-side death (or an OOM-killed JVM) zeroed the round's
-        # correctness artifact. Now: bound the run, and on failure fall
-        # through to the compare if a usable oracle_sql.json + dumps
-        # exist (from a partial run or an earlier one) — queries whose
-        # dump is missing record "no spark output" err rows instead of
-        # the artifact not existing at all.
+        # Bounded + survivable Verify leg: one Spark-side death (or an
+        # OOM-killed JVM) must not zero the correctness artifact, so on
+        # failure the sweep still compares. It can only compare this
+        # run's output: the stale oracle_sql.json is removed here, and
+        # Verify writes a fresh one first, then deletes every selected
+        # query's dump before running any. A query Verify failed or
+        # never reached has no dump and records a "no spark output"
+        # err row, never an earlier run's PASS.
+        Path(f"{outdir}/oracle_sql.json").unlink(missing_ok=True)
         try:
             r = subprocess.run(
                 ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
@@ -517,8 +518,8 @@ def main():
             print(tail)
             if not Path(f"{outdir}/oracle_sql.json").exists():
                 sys.exit(1)
-            print("WARNING: graft.Verify failed; comparing against the "
-                  "dumps that exist (missing dumps become err rows)",
+            print("WARNING: graft.Verify failed; queries it did not "
+                  "finish have no dump and become err rows",
                   file=sys.stderr)
         if "[verify]" in out_all:
             print("verify-time failures:")
